@@ -7,7 +7,7 @@ Run from the root of a checkout of the engine. The first run builds the
 engine and the harness from source with sbt (the harness build depends
 on the engine's root build); later runs reuse the build while the
 sources are unchanged. The workload runs in one JVM with a fixed heap on
-local[4]. The last line of standard output is one JSON object with the
+local[2]. The last line of standard output is one JSON object with the
 keys correct, attempted, failed and metrics; the line before it is the
 workload's full report. Everything the run writes stays inside the
 checkout (.bench_build for the build record, .bench_work for data).
@@ -24,18 +24,8 @@ import time
 HERE = os.path.dirname(os.path.abspath(__file__))
 ROOT = os.path.dirname(HERE)
 WORKLOADS = ("corpus", "capture_stream")
-HEAP = "2g"
 RUN_TIMEOUT_S = 170
 BUILD_TIMEOUT_S = 840
-ADD_OPENS = [
-    "java.base/java.lang", "java.base/java.lang.invoke",
-    "java.base/java.lang.reflect", "java.base/java.io",
-    "java.base/java.net", "java.base/java.nio",
-    "java.base/java.util", "java.base/java.util.concurrent",
-    "java.base/java.util.concurrent.atomic",
-    "java.base/sun.nio.ch", "java.base/sun.nio.cs",
-    "java.base/sun.security.action", "java.base/sun.util.calendar",
-]
 
 
 def fail(msg):
@@ -62,21 +52,23 @@ def sources_stamp():
 
 
 def build(build_dir):
-    """Compile engine + harness; returns the runtime classpath."""
+    """Compile engine + harness; returns the runtime classpath and the
+    JVM options (the engine's, with the benchmark's fixed heap)."""
     stamp = sources_stamp()
     cp_file = os.path.join(build_dir, "classpath.txt")
+    opts_file = os.path.join(build_dir, "java-options.txt")
     stamp_file = os.path.join(build_dir, "stamp.txt")
-    if os.path.exists(cp_file) and os.path.exists(stamp_file):
+    if all(os.path.exists(f) for f in (cp_file, opts_file, stamp_file)):
         with open(stamp_file) as fh:
             if fh.read().strip() == stamp:
-                with open(cp_file) as fh:
-                    return fh.read().strip()
+                with open(cp_file) as fh, open(opts_file) as oh:
+                    return fh.read().strip(), oh.read().split("\n")[:-1]
     os.makedirs(build_dir, exist_ok=True)
     env = dict(os.environ)
     env.setdefault("COURSIER_MODE", "offline")
     log = os.path.join(build_dir, "build.log")
     cmd = ["sbt", "--batch", "-Dsbt.log.noformat=true",
-           "-Dsbt.server.autostart=false", "compile",
+           "-Dsbt.server.autostart=false", "compile", "writeJavaOptions",
            "export Runtime/fullClasspath"]
     with open(log, "w") as out:
         try:
@@ -92,9 +84,11 @@ def build(build_dir):
     cp = lines[-1].strip()
     with open(cp_file, "w") as fh:
         fh.write(cp)
+    shutil.copy(os.path.join(HERE, "target", "java-options.txt"), opts_file)
     with open(stamp_file, "w") as fh:
         fh.write(stamp)
-    return cp
+    with open(opts_file) as fh:
+        return cp, fh.read().split("\n")[:-1]
 
 
 def main():
@@ -110,21 +104,18 @@ def main():
         fail("no engine sources next to the benchmark (expected build.sbt and "
              "src/main/scala/graft in %s)" % ROOT)
     build_dir = os.path.join(ROOT, os.environ.get("CARGO_TARGET_DIR", ".bench_build"))
-    cp = build(build_dir)
+    cp, jvm_opts = build(build_dir)
 
     work = os.path.join(ROOT, ".bench_work", "%s-%d" % (a.workload, os.getpid()))
     shutil.rmtree(work, ignore_errors=True)
     os.makedirs(os.path.join(work, "tmp"))
     java = os.path.join(os.environ["JAVA_HOME"], "bin", "java") \
         if os.environ.get("JAVA_HOME") else "java"
-    cmd = [java, "-Xms" + HEAP, "-Xmx" + HEAP, "-XX:+UseParallelGC"]
-    for m in ADD_OPENS:
-        cmd += ["--add-opens", m + "=ALL-UNNAMED"]
-    cmd += ["-Djava.io.tmpdir=" + os.path.join(work, "tmp"),
-            "-Dspark.callstack.depth=200",
-            "-cp", cp, "geobench.Harness",
-            "--workload", a.workload, "--seed", str(a.seed),
-            "--seconds", str(a.seconds), "--trace", str(a.trace), "--work", work]
+    cmd = [java] + jvm_opts + [
+        "-XX:+UseParallelGC", "-Djava.io.tmpdir=" + os.path.join(work, "tmp"),
+        "-Dspark.callstack.depth=200", "-cp", cp, "geobench.Harness",
+        "--workload", a.workload, "--seed", str(a.seed),
+        "--seconds", str(a.seconds), "--trace", str(a.trace), "--work", work]
     log = os.path.join(build_dir, "run-%s.log" % a.workload)
     t0 = time.time()
     with open(log, "w") as err:

@@ -54,14 +54,13 @@ final class Ctx(var spark: SparkSession, val tracer: Tracer, val blocks: BlockTr
     }
   }
 
-  /** Run one timed pass as pass `id`; returns its wall seconds. */
-  def pass[A](id: Int)(body: => A): (A, Double) = {
+  /** Run `body` as pass `id` and record its interval for the trace. */
+  def pass[A](id: Int)(body: => A): A = {
     tracer.setPass(id)
     val (s0, n0) = (System.currentTimeMillis(), System.nanoTime())
     val out = body
-    val secs = (System.nanoTime() - n0) / 1e9
-    passes += ((id, s0, s0 + (secs * 1000).toLong))
-    (out, secs)
+    passes += ((id, s0, s0 + (System.nanoTime() - n0) / 1000000L))
+    out
   }
 
   /** Drop every cached or checkpointed block, as the engine's own bench
@@ -83,7 +82,10 @@ trait Workload {
 }
 
 object Harness {
-  val Cores = 4
+  /** Spark cores of a run. The passes are bound by the Spark driver, and
+    * on a shared 4-core host two cores gave the same pass times as four
+    * with half the run-to-run spread. */
+  val Cores = 2
   /** Set-ups per run; `setup_s` is their median. */
   val SetupRepeats = 3
 

@@ -1,29 +1,36 @@
 package geobench
 
 import graft.align.Align3d
-import graft.api.Shr3d
+import graft.api.ClassifyGround
 import graft.core.Quant
 import graft.grid.Gridding
 import graft.ingest.WebPages
+import graft.stencil.TileStencil
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** The raster stage of the corpus pass: the geocoded pages of the whole
-  * geocode domain become one SHR3D scene, and ALIGN3D recovers a known
-  * whole-cell (dx, dy) and dz shift of that scene. */
+  * geocode domain become one SHR3D scene (DSM, DTM, object labels and
+  * outlines), and ALIGN3D recovers a known whole-cell (dx, dy) and dz
+  * shift of that scene. */
 object Scene {
-  // the geocode domain (lon -180..180, lat -85..85) on 3-degree cells:
+  // the geocode domain (lon -180..180, lat -85..85) on 6-degree cells:
   // about one page per cell, dense enough for the offset search
   val Lon0 = -180.0
   val Lat0 = -85.0
-  val Gsd = 3.0
-  val Width = 122
-  val Height = 58
-  val Config: Shr3d.Config = Shr3d.Config(
-    spec = Gridding.GridSpec(Lon0, Lat0, Gsd), boundsOpt = Some((Width, Height)),
-    aglMeters = 2.0, minRegionCells = 2,
-    // the pages are a scatter, not solid roofs: opening would erase them
-    openLabels = false)
+  val Gsd = 6.0
+  val Width = 62
+  val Height = 31
+  val Spec: Gridding.GridSpec = Gridding.GridSpec(Lon0, Lat0, Gsd)
+  val Bounds: TileStencil.Bounds = TileStencil.Bounds(Width, Height)
+  val TileSize = 128
+  // the SHR3D facade's default thresholds in quantization steps: 2 m
+  // above ground, 0.5 m height step
+  val AglRaw: Int = math.max(1, math.floor(2.0 / Quant.Scale).toInt)
+  /** The classifyGround loop as the SHR3D facade configures it. */
+  val GroundConfig: ClassifyGround.Config = ClassifyGround.Config(
+    dzRaw = math.max(1, math.floor(0.5 / Quant.Scale).toInt), iterations = 5,
+    maxCount = math.max(1L, (10000.0 / (Gsd * Gsd)).toLong), tileSize = TileSize)
   val AlignConfig: Align3d.Config = Align3d.Config(gsd = 1.0, maxT = 3.0, numSamples = 1000)
 
   /** Seeded whole-cell (dx, dy) in [-2, 2] \ {0}, inside the search

@@ -79,7 +79,8 @@ class BlockTracker extends SparkListener {
   * engine. Jobs are attributed to the span whose id the harness put in
   * the `geobench.span` local property, and to the deepest `graft.<module>`
   * frame of Spark's recorded call site; the call site wins, so jobs that
-  * a facade (`Shr3d.Products`, `upsertSink`) runs inside a span are
+  * an engine call submits itself inside a span (a facade such as
+  * `upsertSink`, or a module pinning its own intermediate results) are
   * charged to the module that submitted them. */
 class Collector extends SparkListener {
   final class Job(val id: Int, val startMs: Long, val span: Long,

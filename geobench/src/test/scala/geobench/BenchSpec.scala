@@ -11,6 +11,7 @@ import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
+import scala.jdk.CollectionConverters._
 
 /** The benchmark's own tests: seeded inputs are reproducible, another
   * seed changes them and still passes every check, and each check
@@ -128,6 +129,24 @@ class BenchSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(Checks.asOfRows(table.count(), base.count()).isDefined)
   }
 
+  private val json = new com.fasterxml.jackson.databind.ObjectMapper()
+  private val benchmark = json.readTree(Paths.get("..", "BENCHMARK.json").toFile)
+  private val spec = json.readTree(Paths.get("spec.json").toFile)
+  private def named(list: String): Seq[(String, String)] =
+    benchmark.get(list).elements().asScala.map(m => m.get("name").asText -> m.get("unit").asText).toSeq
+
+  test("BENCHMARK.json and spec.json name the workloads and metrics the harness reports") {
+    assert(named("end_to_end").map(_._1) == Harness.EndToEnd)
+    assert(named("per_layer") == Layers.Names)
+    assert(spec.get("end_to_end").fieldNames().asScala.toSeq == Harness.EndToEnd)
+    assert(spec.get("per_layer").get("modules").elements().asScala.map(_.asText).toSeq ==
+      Layers.Modules)
+    val workloads = Harness.Workloads.keySet
+    assert(benchmark.get("workloads").elements().asScala.map(_.get("name").asText).toSet ==
+      workloads)
+    assert(spec.get("workloads").fieldNames().asScala.toSet == workloads)
+  }
+
   test("every check passes on a seed not used in development") {
     spark.stop()
     spark = null
@@ -137,6 +156,8 @@ class BenchSpec extends AnyFunSuite with BeforeAndAfterAll {
       try {
         assert(ctx.failed == 0, ctx.failures.mkString("; "))
         assert(ctx.attempted > 0)
+        assert(ctx.e2e.map { case (k, (_, unit)) => k -> unit }.toMap ==
+          named("end_to_end").toMap)
         val layers = LayerReport(ctx).metrics.toMap
         assert(layers.keySet == Layers.Names.map(_._1).toSet)
       } finally ctx.spark.stop()
