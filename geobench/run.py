@@ -66,10 +66,17 @@ def build(build_dir):
     os.makedirs(build_dir, exist_ok=True)
     env = dict(os.environ)
     env.setdefault("COURSIER_MODE", "offline")
+    env["JAVA_TOOL_OPTIONS"] = "-XX:-UsePerfData"  # no /tmp/hsperfdata files
     log = os.path.join(build_dir, "build.log")
+    # sbt's lock and scratch files go to the build directory, not the
+    # home directory or /tmp
+    tmp = os.path.join(build_dir, "sbt-tmp")
+    os.makedirs(tmp, exist_ok=True)
     cmd = ["sbt", "--batch", "-Dsbt.log.noformat=true",
-           "-Dsbt.server.autostart=false", "compile", "writeJavaOptions",
-           "export Runtime/fullClasspath"]
+           "-Dsbt.server.autostart=false", "-Dsbt.boot.lock=false",
+           "-Dsbt.ivy.home=" + os.path.join(build_dir, "ivy"),
+           "-Djna.tmpdir=" + tmp, "-Djava.io.tmpdir=" + tmp,
+           "compile", "writeJavaOptions", "export Runtime/fullClasspath"]
     with open(log, "w") as out:
         try:
             p = subprocess.run(cmd, cwd=HERE, env=env, stdout=subprocess.PIPE,
@@ -112,7 +119,8 @@ def main():
     java = os.path.join(os.environ["JAVA_HOME"], "bin", "java") \
         if os.environ.get("JAVA_HOME") else "java"
     cmd = [java] + jvm_opts + [
-        "-XX:+UseParallelGC", "-Djava.io.tmpdir=" + os.path.join(work, "tmp"),
+        "-XX:+UseParallelGC", "-XX:-UsePerfData",
+        "-Djava.io.tmpdir=" + os.path.join(work, "tmp"),
         "-Dspark.callstack.depth=200", "-cp", cp, "geobench.Harness",
         "--workload", a.workload, "--seed", str(a.seed),
         "--seconds", str(a.seconds), "--trace", str(a.trace), "--work", work]
