@@ -150,6 +150,8 @@ final class CaptureStream extends Workload {
     ctx.e2e("docs_per_s") = ((capturesDone - c0) / wall, "docs/s")
     ctx.e2e("pinned_peak_mb") = (peak, "MB")
     ctx.report("batch_ms_p50") = Harness.median(steady).toString
+    ctx.report("batch_ms") = batchMs.map(t => f"$t%.0f").mkString(",")
+    ctx.report("lookup_ms") = lookupMs.map(t => f"$t%.0f").mkString(",")
     ctx.report("batch_ms_tail") = Harness.tail(steady).map { case (p, v) =>
       s"p$p=$v n=${steady.size}" }.getOrElse(s"n/a n=${steady.size}")
     ctx.report("captures_per_s") = ((capturesDone - c0) / wall).toString

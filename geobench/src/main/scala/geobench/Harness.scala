@@ -38,6 +38,9 @@ final class Ctx(var spark: SparkSession, val tracer: Tracer, val blocks: BlockTr
   val report = mutable.LinkedHashMap[String, String]()
   /** (pass id, start ms, end ms) of every pass; pass 0 is the cold one. */
   val passes = mutable.ArrayBuffer[(Int, Long, Long)]()
+  /** Passes before this id are the cold pass and untimed warm-up passes;
+    * the steady passes start here. */
+  var firstSteady = 1
   /** Per-layer values only the workload knows (files live, ...). */
   val layerExtras = mutable.LinkedHashMap[String, Double]()
   var attempted = 0L

@@ -25,8 +25,8 @@ object Intervals {
 
 /** Per-layer metrics of a traced run: for each steady pass, each module's
   * wall, self and driver time, jobs, tasks, shuffle, spill, pinned bytes
-  * and rows; the reported value is the mean over steady passes (pass 0,
-  * the cold one, is excluded).
+  * and rows; the reported value is the mean over steady passes (the cold
+  * pass and any warm-up passes are excluded).
   *
   * A module's wall is the union of its spans and of the jobs charged to
   * it by call site inside another module's span (the facade's
@@ -55,7 +55,7 @@ object LayerReport {
         j.endMs <= s.endMs).sortBy(s => s.endMs - s.startMs).headOption)
         .map(_.module).getOrElse("harness")
 
-    val steady = ctx.passes.filter(_._1 > 0).toSeq
+    val steady = ctx.passes.filter(_._1 >= ctx.firstSteady).toSeq
     val sums = mutable.HashMap[String, Double]().withDefaultValue(0.0)
     val remainders = mutable.ArrayBuffer[Double]()
     steady.foreach { case (pid, p0, p1) =>
@@ -94,10 +94,10 @@ object LayerReport {
       remainders += (p1 - p0) / 1e3 - selfTotal
     }
     val n = steady.size.max(1).toDouble
-    val steadySpanIds = spans.filter(_.pass > 0).map(_.id).toSet
+    val steadySpanIds = spans.filter(_.pass >= ctx.firstSteady).map(_.id).toSet
     val pip = c.synchronized(c.pipFilter.toList).filter(x => steadySpanIds.contains(x._1))
     val pipIn = pip.map(_._2).sum
-    val floor = c.synchronized(c.floorMs.toList).drop(1)
+    val floor = c.synchronized(c.floorMs.toList).drop(ctx.firstSteady)
     val captureBytes = ctx.layerExtras.getOrElse("meta.capture_bytes", 0.0)
     val extras = Map(
       "streaming.floor_ms" -> (if (floor.isEmpty) 0.0 else Harness.median(floor)),

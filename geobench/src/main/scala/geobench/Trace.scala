@@ -48,7 +48,9 @@ final case class Span(id: Long, module: String, pass: Int, parent: Long,
 }
 
 /** Byte accounting of RDD blocks (cached or checkpointed) from
-  * block-update events. Always registered: it feeds `pinned_peak_mb`. */
+  * block-update events. Always registered: it feeds `pinned_peak_mb`.
+  * Unpersisting an RDD removes its blocks without block-update events,
+  * so the unpersist event releases them here. */
 class BlockTracker extends SparkListener {
   private val held = mutable.HashMap[String, (Int, Long)]() // block -> (rdd, bytes)
   private var total = 0L
@@ -65,6 +67,13 @@ class BlockTracker extends SparkListener {
         total += bytes
         peak = math.max(peak, total)
       }
+    }
+  }
+
+  override def onUnpersistRDD(e: SparkListenerUnpersistRDD): Unit = synchronized {
+    held.filterInPlace { case (_, (rdd, bytes)) =>
+      if (rdd == e.rddId) total -= bytes
+      rdd != e.rddId
     }
   }
 

@@ -83,6 +83,20 @@ class BenchSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(Checks.samePass(ref.updated("b", Digest(1, 3)), ref).isDefined)
   }
 
+  test("pinned bytes are released when an RDD is unpersisted") {
+    val blocks = new BlockTracker
+    spark.sparkContext.addSparkListener(blocks)
+    try {
+      val rdd = spark.sparkContext.parallelize(1 to 10000, 2).cache()
+      rdd.count()
+      org.apache.spark.sql.graftx.Bridge.drainListenerBus(spark.sparkContext)
+      assert(blocks.heldByRdd.getOrElse(rdd.id, 0L) > 0L)
+      rdd.unpersist(blocking = true)
+      org.apache.spark.sql.graftx.Bridge.drainListenerBus(spark.sparkContext)
+      assert(!blocks.heldByRdd.contains(rdd.id))
+    } finally spark.sparkContext.removeSparkListener(blocks)
+  }
+
   test("align check accepts the recovered shift and rejects one off by a cell") {
     val seed = 5L
     val pts = Scene.points(Flagship.geocoded(spark, 8000), seed).localCheckpoint()
